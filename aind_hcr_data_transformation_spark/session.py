@@ -115,6 +115,48 @@ def _merged_java_options(role: str, extra_conf: dict[str, str] | None) -> str:
     return " ".join([_CODE_CACHE_FLAGS, *existing])
 
 
+# The package's parent directory: where a worker finds the engine daemon
+# module whatever the driver's working directory.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _merged_worker_pythonpath(extra_conf: dict[str, str] | None) -> str:
+    """The package's parent directory PLUS any deployment-supplied
+    ``spark.executorEnv.PYTHONPATH`` entries (spark-defaults.conf, then
+    the caller's ``extra_conf``), never clobbering them; duplicates are
+    dropped, first occurrence kept."""
+    key = "spark.executorEnv.PYTHONPATH"
+    entries = [_PACKAGE_PARENT]
+    for value in (_defaults_conf_value(key), (extra_conf or {}).get(key)):
+        if value:
+            entries.extend(filter(None, value.split(os.pathsep)))
+    return os.pathsep.join(dict.fromkeys(entries))
+
+
+def _python_worker_confs(
+    master: str | None, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """Python-worker confs for a session on ``master``: the engine daemon
+    (unless the caller names another) and a worker path that can import
+    it. Empty for non-local masters, whose executors receive the package
+    through --py-files and cannot import it when the daemon starts."""
+    if master is None or not master.startswith("local"):
+        return {}
+    # pyspark 4.1's worker calls importlib.invalidate_caches() at the start
+    # of every task, and CPython before 3.13 then re-reads pyspark.zip's
+    # directory once per zipimporter over it (0.1-0.25 s CPU a task); the
+    # engine daemon re-reads it only when the archive changed. A static
+    # conf, so apply_session_confs cannot set it on a session the driver
+    # built.
+    daemon = "spark.python.daemon.module"
+    return {
+        daemon: (extra_conf or {}).get(
+            daemon, "aind_hcr_data_transformation_spark.pydaemon"
+        ),
+        "spark.executorEnv.PYTHONPATH": _merged_worker_pythonpath(extra_conf),
+    }
+
+
 def get_spark(
     app_name: str = "aind-hcr-spark",
     master: str | None = None,
@@ -142,13 +184,14 @@ def get_spark(
         "spark.executor.extraJavaOptions",
         _merged_java_options("executor", extra_conf),
     )
+    if master is None and not os.environ.get("SPARK_MASTER_URL"):
+        master = f"local[{cpu_parallelism()}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER_URL"):
-        builder = builder.master(f"local[{cpu_parallelism()}]")
     confs = dict(_DEFAULT_CONFS)
     if extra_conf:
         confs.update(extra_conf)
+    confs.update(_python_worker_confs(master, extra_conf))
     for k, v in confs.items():
         if k.endswith(".extraJavaOptions"):
             continue  # already merged with the code-cache flags above

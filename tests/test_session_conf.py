@@ -9,8 +9,11 @@ import os
 
 from aind_hcr_data_transformation_spark.session import (
     _CODE_CACHE_FLAGS,
+    _PACKAGE_PARENT,
     _defaults_conf_value,
     _merged_java_options,
+    _merged_worker_pythonpath,
+    _python_worker_confs,
 )
 
 
@@ -59,3 +62,26 @@ def test_merge_combines_defaults_and_caller(tmp_path, monkeypatch):
         "driver", {"spark.driver.extraJavaOptions": "-Db=2"}
     )
     assert merged == f"{_CODE_CACHE_FLAGS} -Da=1 -Db=2"
+
+
+def test_local_master_runs_engine_daemon(monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", "/nonexistent-conf-dir")
+    confs = _python_worker_confs("local[4]", None)
+    assert confs["spark.python.daemon.module"] == (
+        "aind_hcr_data_transformation_spark.pydaemon"
+    )
+    assert confs["spark.executorEnv.PYTHONPATH"] == _PACKAGE_PARENT
+
+
+def test_non_local_master_keeps_pyspark_daemon():
+    assert _python_worker_confs("spark://host:7077", None) == {}
+    assert _python_worker_confs(None, None) == {}
+
+
+def test_worker_pythonpath_keeps_caller_entries(tmp_path, monkeypatch):
+    conf = tmp_path / "spark-defaults.conf"
+    conf.write_text("spark.executorEnv.PYTHONPATH /deploy/lib\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    caller = os.pathsep.join(["/app/src", _PACKAGE_PARENT, "/deploy/lib"])
+    merged = _merged_worker_pythonpath({"spark.executorEnv.PYTHONPATH": caller})
+    assert merged.split(os.pathsep) == [_PACKAGE_PARENT, "/deploy/lib", "/app/src"]
