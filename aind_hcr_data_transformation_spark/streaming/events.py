@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from ..functions.compat import dround
 from ..tables import SCHEMAS
+from .feed import _bounded_run
 
 from ..operators.windows import EVW_SESSION_SQL, EVW_TUMBLING_SQL
 
@@ -75,34 +76,19 @@ def _run_to_memory_sink(
     The memory sink is the HARNESS device (the driver needs a DataFrame
     back); production sinks are files/Kafka for append-mode queries and
     ``foreachBatch`` upserts for update/complete — see each query's
-    docstring. Shuffle partitions are dialed down for the run —
-    state-store instances scale with them, and at test scale 32 stores of
-    checkpoint churn dominate wall-clock (a real cluster raises the
-    setting with executor count) — then restored.
+    docstring. The checkpoint and the shuffle-partition count come from
+    ``feed._bounded_run``.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    # tmpfs checkpoint (r13): same rationale as feed._ephemeral_ckpt_dir —
-    # the bounded run deletes its checkpoint in ``finally``, so durability
-    # across reboot buys nothing, while the per-batch offset/commit WAL
-    # fsyncs on disk-backed /tmp stretch every micro-batch (feed
-    # throughput attribution measured ~80 ms/batch of
-    # walCommit+commitOffsets). Production callers own their checkpoint
-    # location and its durability; this helper is the harness path.
-    from .feed import _ephemeral_ckpt_dir
-
-    checkpoint = _ephemeral_ckpt_dir(sink_name)
     # default 4, not 8: each state-store instance pays per-batch
     # checkpoint churn, and the r11 trigger-floor audit measured 8->4
     # saving ~0.3-0.7 s per JVM-stateful query at test scale with
-    # identical answers (partition count is pinned inside each run's
-    # fresh checkpoint, so restarts are safe). applyInPandasWithState
-    # queries pass nparts=8: their state processing runs in PYTHON
-    # workers, and the same audit measured 4 partitions ~1 s SLOWER
-    # there (fewer concurrent workers outweighs the store churn).
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    try:
+    # identical answers. applyInPandasWithState queries pass nparts=8:
+    # their state processing runs in PYTHON workers, and the same audit
+    # measured 4 partitions ~1 s SLOWER there (fewer concurrent workers
+    # outweighs the store churn).
+    with _bounded_run(spark, sink_name, nparts) as checkpoint:
         q = (
             df.writeStream.format("memory")
             .queryName(sink_name)
@@ -112,14 +98,6 @@ def _run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the run is bounded and finished: the checkpoint has no
-        # restart value, and leaked checkpoints accumulate one dir per
-        # query run for the host's lifetime (a real deployment keeps
-        # its checkpoint — but it also keeps the QUERY; this harness
-        # discards both together)
-        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(sink_name)
 
 
@@ -619,17 +597,10 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_dir = os.path.join(
         tempfile.gettempdir(), f"upsert_store_{uuid.uuid4().hex[:8]}"
     )
-    # checkpoint on tmpfs (deleted in finally — see _run_to_memory_sink);
     # the STORE stays on the real filesystem: its crash-safe directory
     # swap is the demonstrated sink semantics, not harness scaffolding
-    from .feed import _ephemeral_ckpt_dir
-
-    checkpoint = _ephemeral_ckpt_dir(os.path.basename(store_dir))
     merge_batch = make_upsert_merger(store_dir)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _bounded_run(spark, os.path.basename(store_dir), 8) as checkpoint:
         q = (
             counts.writeStream.foreachBatch(merge_batch)
             .outputMode("update")
@@ -638,9 +609,6 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(checkpoint, ignore_errors=True)
     # harness read-back: the store is the query's real output and would
     # never be deleted in production — here it lives in /tmp, so copy the
     # directory aside (executor-free, never through the driver) and return

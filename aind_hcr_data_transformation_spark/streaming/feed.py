@@ -47,9 +47,11 @@ streaming contract (pyspark.sql.datasource, Spark 4).
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 import time
 import uuid
@@ -118,6 +120,10 @@ def _feed_plan(path: str, target_batches: int) -> list[int]:
         cuts.append(last)
     _PLAN_CACHE[key] = cuts
     return cuts
+
+
+def _target_batches(options) -> int:
+    return int(options.get("feed_target_batches", 6))
 
 
 _PLAN_CACHE: dict = {}
@@ -213,8 +219,11 @@ class EventFeedStreamReader(DataSourceStreamReader):
         if not self._path:
             raise ValueError("event_feed requires option 'path'")
         self._nparts = int(options.get("feed_partitions", 4))
-        self._cuts = _feed_plan(
-            self._path, int(options.get("feed_target_batches", 6))
+        # read_feed plans on the driver and passes the cutoffs; only a
+        # direct format("event_feed") user makes the reader read the file
+        cuts = options.get("feed_cutoffs")
+        self._cuts = json.loads(cuts) if cuts else _feed_plan(
+            self._path, _target_batches(options)
         )
         # default progress dir keyed by a STABLE digest — str hash() is
         # per-process randomized (PYTHONHASHSEED), so a restarted driver
@@ -306,31 +315,79 @@ def read_feed(
     spark: SparkSession, sf_dir: str, **options: str
 ) -> DataFrame:
     """Register (idempotent) and open the event feed over ``sf_dir``'s
-    events table."""
+    events table. The replay plan is made here, memoized per file, and
+    handed to the reader as the ``feed_cutoffs`` option, so the source
+    runner Spark starts for every query reads no parquet."""
     spark.dataSource.register(EventFeedDataSource)
+    path = f"{sf_dir}/events.parquet"
+    cuts = _feed_plan(path, _target_batches(options))
     reader = (
         spark.readStream.format("event_feed")
-        .option("path", f"{sf_dir}/events.parquet")
+        .option("path", path)
+        .option("feed_cutoffs", json.dumps(cuts))
     )
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load()
 
 
-def _ephemeral_ckpt_dir(sink: str) -> str:
-    """Checkpoint root for BOUNDED replay runs: tmpfs (``/dev/shm``)
-    when available, else the system tempdir. The bounded harness
-    deletes its checkpoint in ``finally`` — durability across host
-    reboot buys nothing here, while the per-batch offset/commit WAL
-    fsyncs measurably stretch the micro-batch floor (r13 feed
-    throughput attribution: ~80 ms/batch of walCommit+commitOffsets on
-    disk-backed /tmp). Production callers own their checkpoint
-    location and durability; this helper is not the production path."""
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+@contextlib.contextmanager
+def _bounded_run(spark: SparkSession, name: str, shuffle_partitions: int):
+    """Scope of one BOUNDED harness run: yields a fresh checkpoint path
+    and sets two session confs for the run, restoring both (an unset
+    conf stays unset) and deleting the checkpoint on the way out.
+
+    - The checkpoint lives on tmpfs (``/dev/shm``) when available, else
+      the system tempdir. The run deletes it at the end and nothing ever
+      recovers from it, so durability across a host reboot buys nothing,
+      while the per-batch offset/commit WAL fsyncs on disk-backed /tmp
+      stretch every micro-batch (~80 ms/batch of walCommit+commitOffsets
+      measured by the feed throughput attribution).
+    - ``spark.sql.shuffle.partitions`` is the caller's count: state-store
+      instances scale with it, and at test scale their per-batch
+      checkpoint churn dominates wall time (a real cluster raises it
+      with executor count). It is pinned in each run's fresh checkpoint,
+      so the value never has to match an earlier run.
+    - The checkpoint file manager is Hadoop ``FileSystem``-based instead
+      of Spark's default ``FileContext`` one. Without Hadoop's native
+      library, every FileContext rename checks for a symlink by starting
+      ``readlink`` processes (264 per 2-batch feed run); a local
+      ``rename(2)`` is atomic, so the offset and commit logs are still
+      published atomically, and Spark's checksum and renamed-file checks
+      stay on. This is safe only for a local checkpoint that the run owns
+      and deletes.
+
+    Production callers own their checkpoint location, its durability and
+    its manager: the session defaults do not change, so a query started
+    outside this scope keeps Spark's default manager."""
     shm = "/dev/shm"
     base = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else (
         tempfile.gettempdir()
     )
-    return os.path.join(base, f"ckpt_{sink}")
+    ckpt = os.path.join(base, f"ckpt_{name}")
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        _CKPT_MANAGER_CONF: _FS_CKPT_MANAGER,
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield ckpt
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_feed_bounded(
@@ -368,16 +425,13 @@ def run_feed_bounded(
     run uses a fresh sink + checkpoint.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = _ephemeral_ckpt_dir(sink)
     # 4, not 8: state-store checkpoint churn is per (partition, batch) and
     # the feed deliberately runs several time-aligned batches — the r11
     # trigger-floor audit measured the smaller store count faster at test
-    # scale with identical answers (a real cluster raises this with
-    # executor count; the admission plan is partition-count-independent)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    # scale with identical answers (the admission plan is
+    # partition-count-independent)
+    with _bounded_run(spark, sink, 4) as ckpt:
         writer = (
             df.writeStream.format("memory")
             .queryName(sink)
@@ -459,7 +513,7 @@ def run_feed_bounded(
             time.sleep(0.02)
         else:
             # mirror the watchdog path: stop the query BEFORE raising so
-            # the finally-block checkpoint rmtree never races a live run
+            # the scope's checkpoint rmtree never races a live run
             q.stop()
             raise TimeoutError(
                 f"feed stream did not drain in {timeout_s}s plus the "
@@ -467,11 +521,6 @@ def run_feed_bounded(
             )
         q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(sink)
 
 

@@ -157,6 +157,117 @@ def test_commit_persists_and_new_reader_resumes(tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# driver-planned cutoffs
+# ---------------------------------------------------------------------------
+
+
+class _RecordingSpark:
+    """Stand-in for the session ``read_feed`` talks to: records the
+    options it would hand the reader and returns them from ``load()``."""
+
+    def __init__(self) -> None:
+        self.dataSource = self
+        self.readStream = self
+        self.options: dict = {}
+
+    def register(self, cls) -> None:
+        pass
+
+    def format(self, name: str):
+        return self
+
+    def option(self, key: str, value: str):
+        self.options[key] = value
+        return self
+
+    def load(self) -> dict:
+        return self.options
+
+
+def test_read_feed_hands_the_reader_the_driver_plan(tmp_path):
+    options = read_feed(_RecordingSpark(), SF_DIR, feed_target_batches=3)
+    plan = _feed_plan(EVENTS, 3)
+    assert json.loads(options["feed_cutoffs"]) == plan
+    r = EventFeedStreamReader(
+        {**options, "progress_dir": str(tmp_path / "prog")}
+    )
+    assert r._cuts == plan
+
+
+def test_reader_with_cutoffs_reads_no_file(tmp_path):
+    """The source runner only constructs the reader and walks offsets:
+    given the planned cutoffs, a missing topic file is never opened."""
+    r = EventFeedStreamReader(
+        {
+            "path": str(tmp_path / "missing.parquet"),
+            "feed_cutoffs": json.dumps([10, 20, 30]),
+            "progress_dir": str(tmp_path / "prog"),
+        }
+    )
+    assert [r.latestOffset()["cut"] for _ in range(4)] == [10, 20, 30, 30]
+
+
+# ---------------------------------------------------------------------------
+# bounded-run scope
+# ---------------------------------------------------------------------------
+
+
+def test_bounded_run_sets_and_restores_confs(spark):
+    """Inside the scope both confs read the run's values; after a normal
+    exit and after a raising body each is back to its previous value (an
+    unset one unset again) and the checkpoint is gone."""
+    import contextlib
+
+    import pytest
+
+    from aind_hcr_data_transformation_spark.streaming.feed import (
+        _CKPT_MANAGER_CONF,
+        _FS_CKPT_MANAGER,
+        _bounded_run,
+    )
+
+    parts = "spark.sql.shuffle.partitions"
+    other_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    saved = {k: spark.conf.get(k, None) for k in (parts, _CKPT_MANAGER_CONF)}
+
+    def set_or_unset(confs: dict) -> None:
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    class Boom(Exception):
+        pass
+
+    try:
+        for before in (
+            {parts: "7", _CKPT_MANAGER_CONF: None},
+            {parts: None, _CKPT_MANAGER_CONF: other_manager},
+        ):
+            for fail in (False, True):
+                set_or_unset(before)
+                with pytest.raises(Boom) if fail else contextlib.nullcontext():
+                    with _bounded_run(spark, "scope_probe", 3) as ckpt:
+                        os.makedirs(os.path.join(ckpt, "offsets"))
+                        assert spark.conf.get(parts) == "3"
+                        assert (
+                            spark.conf.get(_CKPT_MANAGER_CONF)
+                            == _FS_CKPT_MANAGER
+                        )
+                        if fail:
+                            raise Boom
+                after = {k: spark.conf.get(k, None) for k in before}
+                assert after == before, (fail, after)
+                assert not os.path.exists(ckpt)
+    finally:
+        set_or_unset(saved)
+
+
+# ---------------------------------------------------------------------------
 # end-to-end: continuous trigger, multi-batch accumulation, recovery
 # ---------------------------------------------------------------------------
 
