@@ -83,6 +83,7 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         "cemb",
         spark_dot(F.col("cemb"), F.col("cemb")).alias("c2"),
     )
+    # bound: k rows, one per centroid
     pairs = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "embedding",
@@ -339,7 +340,7 @@ def _search(emb: DataFrame, codebook: DataFrame) -> DataFrame:
         .select("qid", "qe", "qn2", F.col("pc.cluster").alias("cluster"))
     )
     scored = (
-        corpus.join(F.broadcast(queries), "cluster")
+        corpus.join(queries, "cluster")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -746,6 +747,7 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
+    # bound: _N_QUERIES x _NPROBE rows, one per (query, probed cluster)
     cand = cand_src.join(F.broadcast(probe), "cluster").filter(
         F.col("vec_id") != F.col("qid")
     )

@@ -361,7 +361,7 @@ def pipe_voxel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_extendedprice").alias("_vmax"),
     )
     width = (F.col("_vmax") - F.col("_vmin")) / F.lit(float(n_buckets))
-    dist = dist.crossJoin(F.broadcast(bounds)).withColumn(
+    dist = dist.crossJoin(bounds).withColumn(
         "bkt",
         F.when(F.col("_vmax") <= F.col("_vmin"), F.lit(0))
         .otherwise(
@@ -385,6 +385,7 @@ def pipe_voxel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("bcnt").over(w_bkt) - F.col("bcnt")).alias("off"),
         F.sum("bcnt").over(w_flag).alias("n"),
     )
+    # bound: one row per (l_returnflag, bkt): 3 flags x n_buckets
     ranked = local.join(F.broadcast(offsets), ["l_returnflag", "bkt"]).select(
         "l_returnflag",
         "v",

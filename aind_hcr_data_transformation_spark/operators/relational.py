@@ -3,15 +3,18 @@ sorts, set operations, scalar-function families (SURVEY.md §2.3-§2.5, §2.7-§
 
 The reference has no relational operators (it is a CZI→Zarr ETL pipeline);
 its closest analogs are cited per query. Everything here is stock DataFrame
-API so Catalyst gets full pushdown/pruning/reordering freedom; the only
-physical hints are ``broadcast()`` on dimension tables — the Spark
-restatement of the reference's driver-side metadata broadcast pattern
-(``zeiss_job.py:123-130,145-157``).
+API so Catalyst gets full pushdown/pruning/reordering freedom. Join
+strategy is the planner's: it broadcasts a dimension from its scan
+statistics (``autoBroadcastJoinThreshold``) and AQE re-plans from runtime
+sizes — the Spark restatement of the reference's driver-side metadata
+broadcast pattern (``zeiss_job.py:123-130,145-157``) without a hint that
+would still force the broadcast once the relation outgrows memory. The
+one hint left binds a literal table the planner cannot size.
 
 Scale notes (100 TB): every query below shuffles only on its aggregation or
-join keys; dimension joins are broadcast so the fact table never shuffles
-for them; filters sit directly on scan columns so they push into the
-parquet reader (verify with ``.explain`` → ``PushedFilters``).
+join keys; small dimension joins plan as broadcasts so the fact table never
+shuffles for them; filters sit directly on scan columns so they push into
+the parquet reader (verify with ``.explain`` → ``PushedFilters``).
 """
 
 from __future__ import annotations
@@ -325,7 +328,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("rf", "q").agg(F.count(F.lit(1)).alias("c"))
     )
     n = vc.groupBy("rf").agg(F.sum("c").alias("n"))
-    r2 = ranked.join(F.broadcast(n), "rf")
+    r2 = ranked.join(n, "rf")
 
     def pos(p):
         return (F.col("n") - 1).cast("double") * F.lit(p)
@@ -353,7 +356,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ap")[1].alias("ap95"),
     )
     ranks = (
-        vc.join(F.broadcast(g.select("rf", "ap50", "ap95")), "rf")
+        vc.join(g.select("rf", "ap50", "ap95"), "rf")
         .groupBy("rf")
         .agg(
             F.sum(
@@ -385,7 +388,7 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     bound = F.lit(0.05) + F.col("mt").cast("double") / F.col("n")
-    out = g.join(ranks, "rf").join(F.broadcast(ties), "rf").select(
+    out = g.join(ranks, "rf").join(ties, "rf").select(
         F.col("rf").alias("l_returnflag"),
         "n",
         exact("p50", 0.5).alias("exact_p50"),
@@ -553,7 +556,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") > cutoff)
         .join(orders.filter(F.col("o_orderdate") < cutoff), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            F.broadcast(cust.filter(F.col("c_mktsegment") == "BUILDING")),
+            cust.filter(F.col("c_mktsegment") == "BUILDING"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
@@ -586,11 +589,14 @@ LIMIT 10
 
 
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped 6-way join: three broadcast dims + two fact joins.
+    """TPC-H Q5-shaped 6-way join: three dims + two fact joins.
 
-    region→nation→customer chain broadcasts end-to-end; lineitem⋈orders and
-    ⋈supplier shuffle on their keys. The n_nationkey equality between
-    customer and supplier is the classic "local supplier" correlation.
+    customer, nation and the ASIA region each join straight onto
+    lineitem⋈orders, so every build side is a base scan the planner
+    sizes from file statistics (a pre-joined customer⋈nation⋈region
+    relation has no such statistics and grows with customer). The
+    n_nationkey equality between customer and supplier is the classic
+    "local supplier" correlation.
     """
     region = load_table(spark, sf_dir, "region")
     nation = load_table(spark, sf_dir, "nation")
@@ -598,17 +604,15 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    dim = (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region.filter(F.col("r_name") == "ASIA")), nation.n_regionkey == region.r_regionkey)
-        .select("c_custkey", "c_nationkey", "n_name")
-    )
+    asia = region.filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(dim), orders.o_custkey == dim.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(asia, nation.n_regionkey == asia.r_regionkey)
         .join(
             sup,
-            (li.l_suppkey == sup.s_suppkey) & (dim.c_nationkey == sup.s_nationkey),
+            (li.l_suppkey == sup.s_suppkey) & (cust.c_nationkey == sup.s_nationkey),
         )
         .filter(
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -648,8 +652,8 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -795,7 +799,7 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         qty_agg.withColumn("qty_bucket", F.col("qty").cast("int"))
-        .join(F.broadcast(buckets), "qty_bucket")
+        .join(buckets, "qty_bucket")
         # bucket is integer-exact only for whole quantities; re-apply the
         # precise predicate for fractional quantities.
         .filter(
@@ -1724,8 +1728,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
         )
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
             dsum_round(
@@ -2229,7 +2233,7 @@ def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         probed = (
             probed.withColumn(f"pos{s}", pos(s, "l_orderkey"))
             .join(
-                F.broadcast(w_s),
+                w_s,
                 (F.col(f"pos{s}") / 32).cast("long") == F.col(f"wi{s}"),
                 "left",
             )
@@ -2535,7 +2539,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     binned = (
-        docs.join(F.broadcast(totals), "source")
+        docs.join(totals, "source")
         .withColumn(
             "target",
             F.expr(f"GREATEST(part_bytes DIV {_COMPACT_BINS}, 1)"),
@@ -3076,7 +3080,7 @@ def join_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q2 = calendar.filter(F.col("quarter") == 2)
     return (
-        li.join(F.broadcast(q2), li.ship_month == q2.m)
+        li.join(q2, li.ship_month == q2.m)
         .groupBy("ship_month")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -3217,6 +3221,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prio_key string, tier string",
     )
     return (
+        # bound: the 5-row literal priority table
         o.join(F.broadcast(dim), o.prio_key.eqNullSafe(dim.prio_key))
         .groupBy("tier")
         .agg(
@@ -3340,7 +3345,7 @@ def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_cust"))
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
     )
     rows = per_nation.groupBy("r_name").agg(
         F.concat_ws(
@@ -3810,7 +3815,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = cand.orderBy("frac").limit(_KMV_K)
     union_row = (
         hashed.agg(F.count_distinct("user_id").alias("n_exact"))
-        .crossJoin(F.broadcast(topk.agg(F.max("frac").alias("u_k"))))
+        .crossJoin(topk.agg(F.max("frac").alias("u_k")))
         .select(F.lit("ALL").alias("event_type"), "n_exact", "u_k")
     )
     both = per_group.unionByName(union_row)

@@ -99,7 +99,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n2").alias("qn2"),
     )
     scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+        emb.join(queries, F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
             "vec_id",
@@ -185,7 +185,7 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = (
-        corpus.join(F.broadcast(queries), "bucket")
+        corpus.join(queries, "bucket")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -397,7 +397,7 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
     cands = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+        emb.join(queries, F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
             "vec_id",

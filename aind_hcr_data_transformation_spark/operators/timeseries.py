@@ -708,6 +708,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
+    # bound: one row per event_type, 5 at every scale factor
     dev = e.join(F.broadcast(med), "event_type").select(
         "event_type",
         "med",
@@ -718,6 +719,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("med").alias("med"),
     )
     flagged = dev.select("event_type", "adev").join(
+        # bound: one row per event_type, 5 at every scale factor
         F.broadcast(mad), "event_type"
     )
     return (
@@ -793,7 +795,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("slot_n"),
     )
     return (
-        ev.join(F.broadcast(prof), ["event_type", "hod"])
+        ev.join(prof, ["event_type", "hod"])
         .select(
             "event_id",
             "event_type",

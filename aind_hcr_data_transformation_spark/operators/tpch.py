@@ -8,13 +8,16 @@ synthetic corpus' schema subset (no ``partsupp`` table, no
 
 The reference (a CZI→Zarr ETL job) has no relational surface; its closest
 analog remains the driver-side metadata broadcast
-(``zeiss_job.py:123-130,145-157``), restated here as ``broadcast()`` hints
-on dimension tables.
+(``zeiss_job.py:123-130,145-157``), which the planner restates here by
+broadcasting dimension tables it sizes from scan statistics; no query
+forces a broadcast.
 
 Scale notes (100 TB): every query shuffles only on its aggregation or
 join keys. Fact-fact joins (orders⋈lineitem) are shuffle hash/sort-merge
-on the join key; dimensions (region, nation, supplier, filtered part)
-broadcast so the fact side never reshuffles for them. All date/brand/size
+on the join key; small dimensions (region, nation, supplier, filtered
+part) plan as broadcasts so the fact side never reshuffles for them, and
+one that outgrows ``autoBroadcastJoinThreshold`` falls back to a
+shuffled join instead of a driver-memory broadcast. All date/brand/size
 predicates sit on scan columns → parquet pushdown. Revenue arithmetic is
 decimal-routed (``dsum``/``dround``) so results are partition-order
 independent — see ``functions/compat.py``.
@@ -149,11 +152,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("1997-12-31").cast("timestamp"),
             )
         )
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
+        .join(n1, F.col("s_nationkey") == F.col("s_nkey"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nkey"))
         .filter(
             (
                 (F.col("supp_nation") == "NATION_1")
@@ -229,7 +232,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     joined = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .filter(
             F.col("o_orderdate").between(
@@ -238,10 +241,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(r), F.col("cr_key") == F.col("r_regionkey"))
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n_s), F.col("s_nationkey") == F.col("sn_key"))
+        .join(n_c, F.col("c_nationkey") == F.col("cn_key"))
+        .join(r, F.col("cr_key") == F.col("r_regionkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n_s, F.col("s_nationkey") == F.col("sn_key"))
     )
     return (
         joined.groupBy(F.year("o_orderdate").alias("o_year"))
@@ -300,10 +303,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("gear"))
     n = load_table(spark, sf_dir, "nation")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -393,7 +396,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             dsum(
                 F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0))
@@ -451,7 +454,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
         revenue.join(
-            F.broadcast(max_rev),
+            max_rev,
             F.col("total_revenue") == F.col("max_revenue"),
         )
         .join(s, F.col("supplier_no") == s.s_suppkey)
@@ -496,16 +499,16 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    li_p = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    li_p = li.join(p, li.l_partkey == p.p_partkey)
     avg_qty = li_p.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         F.avg("l_quantity").alias("avg_qty")
     )
     return (
-        # broadcast the per-part mean (r14, guide §3.1): it is
-        # dimension-sized (one row per Brand#1 part), and the planner's
-        # estimate picked a SortMergeJoin that shuffled the filtered
-        # fact side on l_partkey — the hint removes that fact exchange
-        li_p.join(F.broadcast(avg_qty), F.col("l_partkey") == F.col("ap_key"))
+        # no forced broadcast: the Brand#1 part set and its per-part mean
+        # grow with the part table, so the planner picks the strategy
+        # (AQE turns it into a broadcast join at run time when one side
+        # turns out small)
+        li_p.join(avg_qty, F.col("l_partkey") == F.col("ap_key"))
         .filter(F.col("l_quantity") * 5 < F.col("avg_qty"))
         .agg(
             dround(dsum("l_extendedprice") / 7, 2).alias("avg_yearly"),
@@ -601,7 +604,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#3", "Brand#5")
     )
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    joined = li.join(p, li.l_partkey == p.p_partkey)
     branch = (
         (
             (F.col("p_brand") == "Brand#1")
@@ -662,17 +665,17 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_name") == "EUROPE"
     )
     nation = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+        region, F.col("n_regionkey") == F.col("r_regionkey")
     )
     supp = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey")
     )
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "LARGE"
     )
     li = load_table(spark, sf_dir, "lineitem")
     costs = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(
             supp.select("s_suppkey", "s_name", "s_acctbal", "n_name"),
             li.l_suppkey == F.col("s_suppkey"),
@@ -753,19 +756,22 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_7"
     )
+    # semi join: the NATION_7 suppliers keep the supplier scan's size
+    # estimate, so the planner broadcasts them into the lineitem join
+    # (an inner join's estimate is the product of both sides)
     supp = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi"
     )
     li = load_table(spark, sf_dir, "lineitem")
     li_n = li.join(
-        F.broadcast(supp.select("s_suppkey")),
+        supp.select("s_suppkey"),
         li.l_suppkey == F.col("s_suppkey"),
     )
     value_expr = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     per_part = li_n.groupBy("l_partkey").agg(dsum(value_expr).alias("value"))
     total = li_n.agg(dsum(value_expr).alias("total"))
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("value") * 10000 > F.col("total"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
@@ -872,13 +878,13 @@ def q16_parts_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select("l_partkey", "l_suppkey")
         .distinct()
         .join(
-            F.broadcast(bad_supp.select("s_suppkey")),
+            bad_supp.select("s_suppkey"),
             F.col("l_suppkey") == F.col("s_suppkey"),
             "left_anti",
         )
     )
     return (
-        pairs.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        pairs.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
@@ -927,7 +933,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     movers = (
         li.join(
-            F.broadcast(part.select("p_partkey")),
+            part.select("p_partkey"),
             li.l_partkey == F.col("p_partkey"),
             "left_semi",
         )
@@ -1019,7 +1025,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         waiting.join(
-            F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey")
+            supp, F.col("l_suppkey") == F.col("s_suppkey")
         )
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
@@ -1078,7 +1084,7 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     return (
-        cust.crossJoin(F.broadcast(stats))
+        cust.crossJoin(stats)
         .filter(
             F.col("c_acctbal").cast("decimal(30,10)") * F.col("n_pos")
             > F.col("total_bal")

@@ -616,7 +616,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("qid", F.col("s.m").alias("m"), F.col("s.qemb").alias("qemb"))
     )
-    lut = qsub.join(F.broadcast(cb), "m").select(
+    lut = qsub.join(cb, "m").select(
         "qid", "m", "cluster", _sq_l2(F.col("qemb"), F.col("cemb")).alias("d")
     )
     lut_rows = lut.collect()  # O(M*k*|Q|) = 80 rows, corpus-independent
@@ -903,7 +903,7 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import spark_cosine_prenorm
 
     scored = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
+        queries, F.col("vec_id") != F.col("qid")
     ).select(
         "qid",
         "vec_id",

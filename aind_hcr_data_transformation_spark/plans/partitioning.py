@@ -95,6 +95,7 @@ def assign_round_robin(
     spark = df.sparkSession
     off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
     return (
+        # bound: one row per range partition, collected above
         local.join(F.broadcast(off_df), "_pid")
         .withColumn(
             "partition_id",
@@ -167,6 +168,7 @@ def grouped_row_number(
         [(int(pid), g, int(off)) for pid, g, off in offsets], off_schema
     )
     joined = local.join(
+        # bound: one row per (range partition, group), collected above
         F.broadcast(off_df),
         (F.col("_pid") == F.col("_opid"))
         & F.col(group_col).eqNullSafe(F.col("_og")),

@@ -201,6 +201,24 @@ def get_spark(
 
 
 @contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the enclosed block, then put each
+    back: a conf that was set gets its old value again, one that was
+    unset is unset again."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
 def interpreted_eval(spark: SparkSession):
     """Run the enclosed driver-iterated jobs with whole-stage codegen
     OFF (interpreted expression evaluation — same expressions, same
@@ -219,21 +237,14 @@ def interpreted_eval(spark: SparkSession):
     assignment jobs this wraps stay bounded by the training SAMPLE,
     not the corpus.
     """
-    pairs = {
-        "spark.sql.codegen.wholeStage": "false",
-        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-    }
-    prev = {k: spark.conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.codegen.wholeStage": "false",
+            "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+        },
+    ):
         yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def apply_session_confs(spark: SparkSession) -> SparkSession:

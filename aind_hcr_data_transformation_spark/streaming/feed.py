@@ -66,6 +66,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..functions.compat import dround
+from ..session import conf_scope
 
 # feed payload: the broker carries the keyed event record; `props` (the
 # free-form blob) stays behind — a consumer projects what it needs and
@@ -277,8 +278,6 @@ class EventFeedStreamReader(DataSourceStreamReader):
 
     # -- data -------------------------------------------------------------
     def read(self, partition: _FeedRange):
-        trace_dir = os.environ.get("SPARK_GRAFT_FEED_TRACE")
-        t0 = time.time() if trace_dir else 0.0
         tbl, ts = _pid_sorted(
             partition.path, partition.nparts, partition.pid
         )
@@ -286,14 +285,6 @@ class EventFeedStreamReader(DataSourceStreamReader):
 
         i = int(np.searchsorted(ts, partition.lo, side="right"))
         j = int(np.searchsorted(ts, partition.hi, side="right"))
-        if trace_dir:
-            # perf attribution hook (throughput probe): one line per
-            # read() call — worker pid proves reuse, the span bounds
-            # the python-side share of addBatch
-            with open(
-                os.path.join(trace_dir, f"{os.getpid()}_{t0:.6f}"), "w"
-            ) as fh:
-                fh.write(f"{t0} {time.time()} {j - i}")
         yield from tbl.slice(i, j - i).to_batches()
 
 
@@ -376,17 +367,10 @@ def _bounded_run(spark: SparkSession, name: str, shuffle_partitions: int):
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         _CKPT_MANAGER_CONF: _FS_CKPT_MANAGER,
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
     try:
-        yield ckpt
+        with conf_scope(spark, confs):
+            yield ckpt
     finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 

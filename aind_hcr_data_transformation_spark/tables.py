@@ -220,11 +220,6 @@ def load_table(
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Scan the full corpus as a name → DataFrame catalog."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of one fixture table, counted once per session: the
     size-derived operator parameters (dedup df cap, LSH widths) each
@@ -233,9 +228,3 @@ def table_count(spark: SparkSession, sf_dir: str, name: str) -> int:
         spark, f"count.{name}", sf_dir,
         lambda: load_table(spark, sf_dir, name).count(),
     )
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works directly."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

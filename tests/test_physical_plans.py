@@ -25,6 +25,18 @@ def queries(spark):
     return {**m.queries(), **m.production_queries()}
 
 
+@pytest.fixture(scope="module")
+def simple_plans(spark, queries):
+    """Every non-stream query's "simple" plan, built once for the
+    registry-wide sweeps below (streaming queries execute on
+    construction)."""
+    return {
+        name: plan_of(fn(spark, SF), "simple")
+        for name, fn in queries.items()
+        if not name.startswith("stream_")
+    }
+
+
 def test_q1_pushdown_and_pruning(spark, queries):
     plan = plan_of(queries["q1_pricing_summary"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -71,14 +83,11 @@ def test_downsample_partial_aggregation(spark, queries):
     assert "partial_avg" in plan  # combine before shuffle
 
 
-def test_no_row_python_udf_anywhere(spark, queries):
+def test_no_row_python_udf_anywhere(simple_plans):
     """Policy (SURVEY §2.11): no row-at-a-time Python UDF in ANY query.
     Arrow-vectorized exchanges (MapInPandas / ArrowEvalPython) are the
     only sanctioned Python crossings."""
-    for name, fn in queries.items():
-        if name.startswith("stream_"):
-            continue  # streaming queries execute on construction
-        plan = plan_of(fn(spark, SF), "simple")
+    for name, plan in simple_plans.items():
         assert "BatchEvalPython" not in plan, f"{name} uses a row Python UDF"
 
 
@@ -87,7 +96,7 @@ def test_multimodal_uses_arrow_batches(spark, queries):
     assert "MapInPandas" in plan
 
 
-def test_no_accidental_cartesian_anywhere(spark, queries):
+def test_no_accidental_cartesian_anywhere(simple_plans):
     """Cross products only where the operator IS a cross product:
     join_cross (bounded candidate generation) and sim_cosine_topk (brute
     force against a broadcast query set — the exact-baseline by design)."""
@@ -172,10 +181,7 @@ def test_no_accidental_cartesian_anywhere(spark, queries):
         # one-row data-derived cutoff broadcast (the as-of timestamp)
         "feature_snapshot_asof",
     }
-    for name, fn in queries.items():
-        if name.startswith("stream_"):
-            continue
-        plan = plan_of(fn(spark, SF), "simple")
+    for name, plan in simple_plans.items():
         if name not in allowed_cartesian:
             assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
         if name not in allowed_bnlj:
@@ -216,3 +222,24 @@ def test_null_safe_join_is_hash_not_bnlj(spark, queries):
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_every_broadcast_hint_states_its_bound():
+    """The planner and AQE choose join strategy from statistics; a
+    forced broadcast is kept only on a relation whose row count cannot
+    grow with the data (a one-row aggregate, a k-row codebook,
+    nation/region). Each ``F.broadcast(`` in the package carries a
+    ``# bound:`` comment on its line or the line above saying why."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "aind_hcr_data_transformation_spark"
+    unbounded = []
+    for path in sorted(pkg.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "F.broadcast(" not in line:
+                continue
+            context = line + (lines[i - 1] if i else "")
+            if "# bound:" not in context:
+                unbounded.append(f"{path.relative_to(pkg)}:{i + 1}")
+    assert not unbounded, f"broadcast hints without a # bound: comment: {unbounded}"

@@ -85,3 +85,46 @@ def test_worker_pythonpath_keeps_caller_entries(tmp_path, monkeypatch):
     caller = os.pathsep.join(["/app/src", _PACKAGE_PARENT, "/deploy/lib"])
     merged = _merged_worker_pythonpath({"spark.executorEnv.PYTHONPATH": caller})
     assert merged.split(os.pathsep) == [_PACKAGE_PARENT, "/deploy/lib", "/app/src"]
+
+
+def test_interpreted_eval_restores_set_and_unset_confs(spark):
+    """Inside the scope codegen is off; after a normal exit and after a
+    raising body a conf that was set has its old value again and one
+    that was unset is unset again."""
+    import contextlib
+
+    import pytest
+
+    from aind_hcr_data_transformation_spark.session import interpreted_eval
+
+    whole_stage = "spark.sql.codegen.wholeStage"
+    factory = "spark.sql.codegen.factoryMode"
+    saved = {k: spark.conf.get(k, None) for k in (whole_stage, factory)}
+
+    def set_or_unset(confs: dict) -> None:
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    class Boom(Exception):
+        pass
+
+    try:
+        for before in (
+            {whole_stage: "true", factory: None},
+            {whole_stage: None, factory: "CODEGEN_ONLY"},
+        ):
+            for fail in (False, True):
+                set_or_unset(before)
+                with pytest.raises(Boom) if fail else contextlib.nullcontext():
+                    with interpreted_eval(spark):
+                        assert spark.conf.get(whole_stage) == "false"
+                        assert spark.conf.get(factory) == "NO_CODEGEN"
+                        if fail:
+                            raise Boom
+                after = {k: spark.conf.get(k, None) for k in before}
+                assert after == before, (fail, after)
+    finally:
+        set_or_unset(saved)
